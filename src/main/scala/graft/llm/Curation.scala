@@ -354,43 +354,33 @@ object Curation {
     * Scale shape per iteration: one equi-join (edges × ranks on src,
     * out-degrees folded in), one keyed aggregate, one left join back
     * to the node set — all on the node/src key; `iters` is a handful
-    * (authority stabilizes fast), so the loop materializes each
-    * generation and releases the last, like dupClusters. */
+    * (authority stabilizes fast). Each generation is an eager local
+    * checkpoint — one job per iteration, every plan rooted on the
+    * previous generation, nothing left in the CacheManager. */
   def pageRankInt(edges: DataFrame, iters: Int,
       scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"pageRankInt: iters=$iters")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src"), col("dst")).distinct()
-      .persist(MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
-      .persist(MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outd"))
     var ranks = nodes.select(col("id"), lit(scale).as("rank"))
-      .persist(MEMORY_AND_DISK)
-    var prev = ranks
     (1 to iters).foreach { _ =>
       val contrib = e
         .join(deg, Seq("src"))
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst"), expr("rank div outd").as("c"))
       val sums = contrib.groupBy("dst").agg(sum(col("c")).as("s"))
-      val next = nodes
+      ranks = nodes
         .join(sums.withColumnRenamed("dst", "id"), Seq("id"), "left")
         .select(col("id"),
           (lit(scale * 15L / 100L) +
             expr("(85 * coalesce(s, 0)) div 100")).as("rank"))
-        .persist(MEMORY_AND_DISK)
-      next.count(): Unit // materialize before releasing the parent
-      prev.unpersist(blocking = false)
-      prev = next
-      ranks = next
+        .localCheckpoint(eager = true)
     }
-    // The fixpoint is already materialized by the per-iteration counts;
-    // hand it back as an eager checkpoint and release every internal
-    // cache (edges, node set, final generation) so nothing stays pinned
-    // in the CacheManager after the caller consumes the ranks.
-    graft.core.Materialize.drained(ranks, prev, nodes, e)
+    ranks
   }
 
   /** Token-window document chunking — the step between cleaning and

@@ -168,7 +168,7 @@ object Dedup {
         // driver (≤ maxBucket rows — bounded at any corpus size; the
         // ivfCentroids driver-array precedent). A plan-side cumulative
         // window was measured 21–23 s vs ~8 s unbudgeted at sf0.1
-        // (graft.tmp.CjkDiag): it makes `sizes` a SECOND consumer of
+        // on the CJK fixture: it makes `sizes` a SECOND consumer of
         // the caller's yet-unmaterialized shingle persist and the
         // window barrier splits the single action into two waves of
         // corpus scans. The driver histogram instead runs one bounded
@@ -450,8 +450,7 @@ object Dedup {
     * caller's action so repeated invocations in a long-lived session
     * accumulate MEMORY_AND_DISK relations. Release it once the result
     * is consumed — `spark.catalog.clearCache()` or
-    * `spark.sharedState.cacheManager.uncacheQuery` — the same contract
-    * [[dupClusters]] documents for its label relation. */
+    * `spark.sharedState.cacheManager.uncacheQuery`. */
   def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
       maxBucket: Long = 10000L, cjkAware: Boolean = false,
@@ -543,69 +542,50 @@ object Dedup {
   }
 
   /** Resolve duplicate PAIRS into clusters: connected components with
-    * the minimum member id as the canonical keeper — the step that
-    * turns (a,b) near-dup evidence into a per-document keep/drop
-    * decision. Min-label propagation: every node starts as its own
-    * label, and each iteration takes the min label over direct
-    * neighbors (one equi-join + one hash aggregate), so labels travel
-    * one hop per iteration and the loop converges in graph-diameter
-    * iterations — near-dup graphs are short chains in practice, and
-    * `maxIter` caps pathological components. Each iteration persists
-    * its labels and releases the previous generation.
+    * the minimum member id as the canonical keeper. Output (id, cluster)
+    * for every id in a pair, where cluster is the least id of its
+    * component.
     *
-    * One Spark action per iteration: the previous label rides through
-    * the propagation union as a null-padded `prev` column (min ignores
-    * nulls; each id has exactly one labels row, so min(prev) IS the
-    * previous label), and the convergence count filters the persisted
-    * result directly — materializing the new generation and measuring
-    * movement in the same job, with no second join against the old
-    * labels. Output (id, cluster), CHECKPOINTED: the fixpoint is
-    * already materialized by the convergence counts, so the final
-    * generation is handed back as an eager localCheckpoint and every
-    * internal cache is released before returning — callers reuse the
-    * materialized labels without anything staying pinned in the
-    * CacheManager (the checkpoint blocks free themselves once the
-    * result is unreachable).
+    * Min-label propagation moves labels one hop per round, so the loop
+    * runs graph-diameter rounds. Each round's labels are a local
+    * checkpoint that the round's convergence count materializes: one
+    * action per round, every plan rooted on the previous round's
+    * checkpoint, and nothing left in the CacheManager.
     *
     * Fails loud if the fixpoint is not reached within `maxIter` —
     * silently returning split components would let near-duplicates
     * survive dedup; raise `maxIter` for graphs of larger diameter. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = pairs.select(col("a").as("x"), col("b").as("y"))
       .unionAll(pairs.select(col("b").as("x"), col("a").as("y")))
-      .persist(MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     var labels = e.groupBy(col("x").as("id")).agg(min(col("y")).as("nmin"))
       .select(col("id"), least(col("id"), col("nmin")).as("cluster"))
-      .persist(MEMORY_AND_DISK)
-    var handle = labels
+      .localCheckpoint(eager = false)
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
+      // `prev` carries the old label through the union: each id has one
+      // labels row, and min ignores the nulls padded onto `prop`
       val prop = e.join(labels.withColumnRenamed("id", "y2"), col("y") === col("y2"))
         .select(col("x").as("id"), col("cluster"),
           lit(null).cast("long").as("prev"))
       val next = labels.select(col("id"), col("cluster"), col("cluster").as("prev"))
         .unionAll(prop)
         .groupBy("id").agg(min(col("cluster")).as("cluster"), min(col("prev")).as("prev"))
-        .persist(MEMORY_AND_DISK)
+        .localCheckpoint(eager = false)
       // Labels only decrease (the old label is in the union), so the
-      // count scans every partition — caching next — and counts movers
-      // in the same single action.
+      // count scans every partition — materializing the checkpoint —
+      // and counts movers in the same single action.
       changed = next.filter(col("cluster") < col("prev")).count()
-      handle.unpersist(blocking = false)
-      handle = next
       labels = next.select("id", "cluster")
       it += 1
     }
-    e.unpersist(blocking = false)
-    if (changed > 0) {
-      handle.unpersist(blocking = false)
+    if (changed > 0)
       throw new IllegalStateException(
         s"dupClusters did not converge in $maxIter iterations ($changed labels still moving) — " +
           "a component's diameter exceeds maxIter; raise it to cover the longest duplicate chain")
-    }
-    graft.core.Materialize.drained(labels, handle)
+    labels
   }
 
   /** Apply cluster resolution: keep every document that is its own

@@ -100,8 +100,9 @@ object Graph {
     * equi-join on the vertex key, then min-folds — so round d
     * shuffles O(|frontier_d| · avg-degree) rows, never the whole
     * reach set, and a bounded depth means a bounded plan (no
-    * iterate-to-fixpoint driver loop; for unbounded closure the
-    * pointer-doubling in Hierarchy/dupClusters is the right tool).
+    * iterate-to-fixpoint driver loop; unbounded closure belongs to the
+    * fixpoints: pointer doubling in Hierarchy.flattenToRoot, min-label
+    * propagation in Dedup.dupClusters).
     * `seeds` needs a `v` column; seeds not in the edge set keep
     * level 0. Output: (v, lvl). */
   def bfsLevels(edges: DataFrame, seeds: DataFrame, depth: Int): DataFrame = {
@@ -113,7 +114,7 @@ object Graph {
     // in parallel branches of one job. At true scale a caller looping
     // deeper than a few rounds should hand in a MATERIALIZED edge
     // list; the operator's own contract is bounded depth (unbounded
-    // closure belongs to the pointer-doubling in Hierarchy/dupClusters).
+    // closure belongs to Hierarchy.flattenToRoot / Dedup.dupClusters).
     val und = edges.select(col("a").as("x"), col("b").as("y"))
       .unionAll(edges.select(col("b").as("x"), col("a").as("y")))
     var levels = seeds.select(col("v"), lit(0L).as("lvl"))

@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
 object Hierarchy {
 
   /** `edges`: (id, parent) with parent NULL for roots. Returns
-    * (id, root, depth) covering every id (roots at depth 0).
-    * Throws if `maxIters` pointer-doubling rounds don't settle —
-    * that means depth > 2^maxIters or a CYCLE; both are data bugs
-    * this op must surface, not loop on. */
+    * (id, root, depth) covering every id (roots at depth 0). Each
+    * round's state is a local checkpoint materialized by the round's
+    * count, so every round plans from a leaf and nothing is left in
+    * the CacheManager. Throws if `maxIters` pointer-doubling rounds
+    * don't settle — that means depth > 2^maxIters or a CYCLE; both are
+    * data bugs this op must surface, not loop on. */
   def flattenToRoot(edges: DataFrame, maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // contract: every non-null parent is itself a node — a dangling
     // pointer would otherwise null out silently through the left join
     val dangling = edges.filter(col("parent").isNotNull)
@@ -35,37 +36,26 @@ object Hierarchy {
         when(col("parent").isNull, col("id")).otherwise(col("parent")).as("anc"),
         when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("d"),
         col("parent").isNull.as("done"))
-      .persist(MEMORY_AND_DISK)
-    var handle = state
+      .localCheckpoint(eager = false)
     var it = 0
     var remaining = state.filter(!col("done")).count()
     while (remaining > 0 && it < maxIters) {
       val ptr = state.select(col("id").as("p_id"), col("anc").as("p_anc"),
         col("d").as("p_d"), col("done").as("p_done"))
-      val next = state.join(ptr, state("anc") === ptr("p_id"), "left")
+      state = state.join(ptr, state("anc") === ptr("p_id"), "left")
         .select(col("id"),
           when(col("done"), col("anc")).otherwise(col("p_anc")).as("anc"),
           when(col("done"), col("d")).otherwise(col("d") + col("p_d")).as("d"),
           (col("done") || col("p_done")).as("done"))
-        .persist(MEMORY_AND_DISK)
-      remaining = next.filter(!col("done")).count()
-      handle.unpersist(blocking = false)
-      handle = next
-      state = next
+        .localCheckpoint(eager = false)
+      remaining = state.filter(!col("done")).count()
       it += 1
     }
-    if (remaining > 0) {
-      handle.unpersist(blocking = false)
+    if (remaining > 0)
       throw new IllegalStateException(
         s"flattenToRoot did not settle in $maxIters doubling rounds " +
           s"($remaining nodes unresolved) — depth exceeds 2^$maxIters or the parent graph has a cycle")
-    }
-    // Already materialized by the per-round counts: checkpoint the
-    // settled table and release the final generation's cache so the
-    // CacheManager holds nothing once the caller is done with it.
-    graft.core.Materialize.drained(
-      state.select(col("id"), col("anc").as("root"), col("d").as("depth")),
-      handle)
+    state.select(col("id"), col("anc").as("root"), col("d").as("depth"))
   }
 
   /** Subtree rollup: per root, descendant count, max depth, and an

@@ -2,6 +2,7 @@ package graft.xml
 
 import java.io.StringReader
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -71,7 +72,7 @@ object Xml {
           else reader.next() match {
             case XMLStreamConstants.START_ELEMENT if reader.getLocalName == rowTag =>
               val row = readRowElement(reader, doFlatten)
-              pending = keep.fold(row)(ks => row.view.filterKeys(ks).toMap)
+              pending = keep.fold(row)(ks => VectorMap.from(row.view.filterKeys(ks)))
             case _ =>
           }
         }
@@ -132,7 +133,7 @@ object Xml {
     else childText.foreach { case (k, sb) =>
       if (!flatten || sb.toString.trim.nonEmpty) row(k) = sb.toString.trim
     }
-    row.toMap
+    VectorMap.from(row) // document column order, at any width
   }
 
   /** S9 auto-detection on one sampled document: any element with ≥2
@@ -160,7 +161,7 @@ object Xml {
       walk(root, root.getTagName)
       if (out.isEmpty)
         Left(Seq(Map("#text" -> Option(root.getTextContent).getOrElse("").trim)))
-      else Right(out.toMap)
+      else Right(VectorMap.from(out))
     } catch {
       case _: Throwable =>
         Left(Seq(Map("error" -> "XML parse failure", "raw" -> xml.take(1000))))

@@ -205,6 +205,22 @@ class LlmSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("dupClusters: 10- and 20-document chains resolve to one cluster keyed by id 1") {
+    // near-dup version chains: diameter n-1, so n-1 propagation rounds
+    Seq(10L, 20L).foreach { n =>
+      val chain = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+      val got = Dedup.dupClusters(chain).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (1L to n).map(_ -> 1L).toMap, s"$n-document chain")
+    }
+  }
+
+  test("dupClusters: a 30-document chain fails loud at the default maxIter") {
+    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("a", "b")
+    val ex = intercept[IllegalStateException](Dedup.dupClusters(chain).collect())
+    assert(ex.getMessage.contains("did not converge"), ex.getMessage)
+  }
+
   test("property: dupClusters equals in-memory union-find on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val nodeG = Gen.chooseNum(0L, 30L)

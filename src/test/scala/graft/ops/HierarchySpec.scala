@@ -23,6 +23,11 @@ class HierarchySpec extends SparkSpec {
     val got = flat(chain, maxIters = 8)
     assert(got.contains((40L, 0L, 40L)))
     assert(got.size == 41)
+    // depth 10,000 settles in 14 doublings under the default maxIters
+    val deep = (0L to 10000L).map(i => i -> (if (i == 0) None else Some(i - 1)))
+    val gotDeep = flat(deep)
+    assert(gotDeep.contains((10000L, 0L, 10000L)))
+    assert(gotDeep.size == 10001)
   }
 
   test("cycle is surfaced as an error, not an infinite loop") {

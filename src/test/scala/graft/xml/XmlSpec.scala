@@ -101,6 +101,20 @@ class XmlSpec extends SparkSpec {
     assert(schema.fieldNames.toSeq == Seq("a"))
   }
 
+  test("readXml keeps document column order for rows wider than 4 fields") {
+    val order = Seq("@id", "zeta", "alpha", "mid", "beta", "omega", "gamma")
+    val doc = "<rows>" + (1 to 3).map(i =>
+      s"""<row id="$i"><zeta>z$i</zeta><alpha>a$i</alpha><mid>m$i</mid>""" +
+        s"<beta>b$i</beta><omega>o$i</omega><gamma>g$i</gamma></row>").mkString + "</rows>"
+    val d = java.nio.file.Files.createTempDirectory("xmlorder")
+    java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
+    val df = Xml.readXml(spark, d.toString, "row")
+    assert(df.columns.toSeq == order)
+    assert(df.orderBy("@id").head().toSeq == Seq("1", "z1", "a1", "m1", "b1", "o1", "g1"))
+    assert(Xml.parseRows(doc, "row", keep = Some(order.toSet - "mid")).head.keys.toSeq ==
+      order.filterNot(_ == "mid"))
+  }
+
   test("DSv2 scan prunes columns into the source (SURVEY §4)") {
     val doc = "<rows>" + (1 to 50).map(i =>
       s"<row><a>$i</a><b>b$i</b><c>c$i</c><d>d$i</d></row>").mkString + "</rows>"
