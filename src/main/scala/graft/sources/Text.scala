@@ -1,9 +1,15 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{Charset, CodingErrorAction}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.control.NonFatal
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Text-family sources with the reference's parse semantics
   * (SURVEY §2.1 S1-S6, S13; §2.3 P7, P10, P11; sniffer S3).
@@ -11,30 +17,35 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   * All readers return all-string DataFrames (the reference's universal
   * `String(v ?? '')` coercion) and stay lazy scans — Spark's CSV/JSON/
   * text readers split large files by HDFS block, so the same code path
-  * parallelizes across a cluster; only the delimiter sniff and encoding
-  * probe read a bounded head of one file on the driver (mirroring the
-  * reference's first-2000-chars sample).
+  * parallelizes across a cluster; only the delimiter sniff, encoding
+  * probe and CSV header read a bounded head of one file on the driver
+  * (mirroring the reference's first-2000-chars sample).
   */
 object Text {
 
-  /** Read the first n bytes of the (first) file at path via the Hadoop
-    * FS API — works for any Spark-reachable filesystem, not just local. */
-  def readHead(spark: SparkSession, path: String, n: Int = 2000): String = {
+  /** Up to n head bytes of the first file a read of path starts from —
+    * path itself, or for a directory its first non-empty file by name
+    * (so Spark's empty `_SUCCESS` marker is skipped) — via the Hadoop FS
+    * API, which works for any Spark-reachable filesystem. The flag is
+    * true when the bytes are known to be the whole file. */
+  private def headBytes(spark: SparkSession, path: String, n: Int): (Array[Byte], Boolean) = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val file =
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter(s => s.isFile && s.getLen > 0)
-          .sortBy(_.getPath.getName).headOption
-          .map(_.getPath).getOrElse(p)
-      else p
-    val in = fs.open(file)
-    try {
-      val buf = new Array[Byte](n)
-      val read = in.read(buf, 0, n)
-      new String(buf, 0, math.max(read, 0), "UTF-8")
-    } finally in.close()
+          .sortBy(_.getPath.getName).headOption.map(_.getPath)
+      else Some(p)
+    file.fold((Array.emptyByteArray, true)) { f =>
+      val in = fs.open(f)
+      val bytes = try in.readNBytes(n) finally in.close()
+      (bytes, bytes.length < n)
+    }
   }
+
+  /** The first n bytes of the (first) file at path, decoded as UTF-8. */
+  def readHead(spark: SparkSession, path: String, n: Int = 2000): String =
+    new String(headBytes(spark, path, n)._1, UTF_8)
 
   /** S3: delimiter sniffing over the first 2000 chars; max count wins,
     * ties tab ≥ comma ≥ semicolon (reference compare/page.tsx:181-189). */
@@ -51,29 +62,23 @@ object Text {
   /** P11: encoding with UTF-8 fallback — probe the head bytes under the
     * requested charset (strict decode); failure falls back to UTF-8
     * (reference FileUploader.tsx:313-314 TextDecoder fallback). */
-  def resolveEncoding(spark: SparkSession, path: String, encoding: String): String = {
-    if (encoding.equalsIgnoreCase("UTF-8")) return "UTF-8"
+  def resolveEncoding(spark: SparkSession, path: String, encoding: String): String =
+    if (encoding.equalsIgnoreCase("UTF-8")) "UTF-8"
+    else {
+      val (head, whole) = headBytes(spark, path, 4096)
+      probeEncoding(head, whole, encoding)
+    }
+
+  /** A multi-byte character cut by the end of a partial head is not
+    * malformed input, so only a whole file is decoded to its end. */
+  private def probeEncoding(head: Array[Byte], whole: Boolean, encoding: String): String =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val file =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
-            .headOption.map(_.getPath).getOrElse(p)
-        else p
-      val in = fs.open(file)
-      val bytes = try {
-        val buf = new Array[Byte](4096)
-        val read = in.read(buf, 0, 4096)
-        java.util.Arrays.copyOf(buf, math.max(read, 0))
-      } finally in.close()
-      Charset.forName(encoding).newDecoder()
+      val dec = Charset.forName(encoding).newDecoder()
         .onMalformedInput(CodingErrorAction.REPORT)
         .onUnmappableCharacter(CodingErrorAction.REPORT)
-        .decode(java.nio.ByteBuffer.wrap(bytes))
-      encoding
-    } catch { case _: Throwable => "UTF-8" }
-  }
+      val out = CharBuffer.allocate(math.ceil(head.length * dec.maxCharsPerByte).toInt)
+      if (dec.decode(ByteBuffer.wrap(head), out, whole).isError) "UTF-8" else encoding
+    } catch { case NonFatal(_) => "UTF-8" }
 
   /** Quote-aware single-line split with `""` escape, every cell trimmed
     * after unquoting (reference splitCSVLine, compare/page.tsx:155-178). */
@@ -96,52 +101,53 @@ object Text {
   }
 
   /** S1/S2/S4: CSV/TSV scan with reference semantics
-    * (compare/page.tsx:134-178): header = line 1, cells trimmed; empty
-    * header cell for column c → `col{c+1}`; duplicate header names →
-    * last occurrence wins (the reference's row-object key collision);
-    * missing cells → ''; `""` quote escape; every cell trimmed AFTER
-    * unquoting (faithful-but-lossy, per SURVEY §7.4); blank lines
-    * dropped (Spark's CSV reader skips them natively).
+    * (compare/page.tsx:134-178): header = first non-blank line, a leading
+    * UTF-8 BOM dropped; empty header cell c → `col{c+1}`; duplicate names
+    * → last wins; missing cells → ''; `""` quote escape; every cell
+    * trimmed after unquoting (SURVEY §7.4); blank lines dropped.
+    * `delimiter = None` sniffs it (S3); a head that is not valid
+    * `encoding` falls back to UTF-8 (P11).
     *
-    * The header line is read once on the driver (≤64 KB sample); the
-    * data scan itself is Spark's splittable CSV reader, so large files
-    * still parallelize by block. */
+    * One bounded head read (64 KB of the first file) on the driver; no
+    * Spark job runs until an action. */
   def readCsv(spark: SparkSession, path: String, delimiter: Option[String] = None,
       encoding: String = "UTF-8"): DataFrame = {
-    val d = delimiter.getOrElse(detectDelimiter(readHead(spark, path)))
-    val enc = resolveEncoding(spark, path, encoding)
+    val (head, whole) = headBytes(spark, path, 65536)
+    val d = delimiter.getOrElse(
+      detectDelimiter(new String(head, 0, math.min(head.length, 2000), UTF_8)))
+    val enc = probeEncoding(head, whole, encoding)
     // Spark 4 allows only a short charset list by default; legacy-mode
     // opens the full java.nio set (EUC-KR/CP949, Shift_JIS — the
     // reference's P11 encodings, FileUploader.tsx:233).
     val builtin = Set("iso-8859-1", "us-ascii", "utf-16", "utf-16be", "utf-16le", "utf-32", "utf-8")
     if (!builtin.contains(enc.toLowerCase))
       spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-    val raw = spark.read
-      .option("header", "true")
-      .option("sep", d)
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("encoding", enc)
-      .option("inferSchema", "false")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    val headerLine = readHead(spark, path, 65536).linesIterator
-      .find(_.trim.nonEmpty).getOrElse("")
-    val cells = splitLine(headerLine, d.charAt(0))
-    val names = raw.columns.indices.map { i =>
+    val opts = Map("header" -> "true", "sep" -> d, "quote" -> "\"", "escape" -> "\"",
+      "encoding" -> enc, "mode" -> "PERMISSIVE")
+    // The schema Spark's own inference (TextInputCSVDataSource
+    // .inferFromDataset) builds after a take(1) job: its parser and safe
+    // names over the same header line. Positional names instead would
+    // make every file's header check log a mismatch warning.
+    val conf = spark.sessionState.conf
+    val csvOpts = new CSVOptions(opts, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val headerLine = CSVExprUtils.extractHeader(new String(head, enc).linesIterator, csvOpts)
+    val tokens = headerLine.flatMap(l => Option(new CsvParser(csvOpts.asParserSettings).parseLine(l)))
+      .getOrElse(Array.empty[String])
+    val schema = StructType(CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, csvOpts)
+      .map(StructField(_, StringType)))
+    val raw = spark.read.options(opts).schema(schema).csv(path)
+    val cells = splitLine(headerLine.getOrElse("").stripPrefix("\uFEFF"), d.charAt(0))
+    val names = tokens.indices.map { i =>
       val h = if (i < cells.length) cells(i) else ""
       if (h.isEmpty) s"col${i + 1}" else h
     }
     // last-wins on duplicate names
     val keep = names.zipWithIndex.groupBy(_._1).map(_._2.last._2).toSet
-    val positional = raw.toDF(raw.columns.indices.map(i => s"__c$i"): _*)
+    val positional = raw.toDF(tokens.indices.map(i => s"__c$i"): _*)
     positional.select(names.zipWithIndex.collect { case (n, i) if keep(i) =>
       coalesce(trim(col(s"__c$i")), lit("")).as(n)
     }: _*)
   }
-
-  def readTsv(spark: SparkSession, path: String, encoding: String = "UTF-8"): DataFrame =
-    readCsv(spark, path, Some("\t"), encoding)
 
   /** S5 + P7: one trimmed line → one row, single column `value`, blank
     * lines dropped (reference FileUploader.tsx:56-62).
